@@ -38,9 +38,10 @@ import graft.pipeline.{ExtractPipeline, ParquetTableIO, TableIO}
   *    never re-appended (no duplicate rows, ever), and their missing
   *    checkpoint rows are backfilled from the already-written files.
   * Extraction is pure and part_id is a pure function of url for FIXED
-  * P (P is persisted in parts.meta on first run and adopted by every
-  * rerun), so a re-extracted part would be byte-identical anyway; the
-  * reconciliation just avoids paying for it and keeps row counts exact.
+  * P (P is persisted with the output table on first run and adopted by
+  * every rerun, [[TableIO.resolveParts]]), so a re-extracted part would
+  * be byte-identical anyway; the reconciliation just avoids paying for
+  * it and keeps row counts exact.
   *
   * On a real cluster the appends are Iceberg snapshots
   * ([[graft.pipeline.IcebergTableIO]]) and the output-part_id probe
@@ -94,12 +95,9 @@ object ExtractJob {
     // part_id = pmod(xxhash64(url), P) is only a pure function of url
     // for FIXED P: resuming with a different P than the run that wrote
     // the checkpoint silently drops/duplicates parts. The FIRST run
-    // persists P next to the table; every later run ADOPTS it (the CLI
-    // value is a request, not an override). Iceberg deployment: store P
-    // as a table property instead.
-    val parts =
-      if (io eq ParquetTableIO) resolveParts(spark, outDir, numLogicalParts)
-      else numLogicalParts
+    // persists P with the output table; every later run ADOPTS it (the
+    // CLI value is a request, not an override).
+    val parts = io.resolveParts(spark, outPath, numLogicalParts)
 
     // Drop data files a crashed append left behind (present on disk,
     // recorded by no completed commit) — otherwise their part_ids look
@@ -178,33 +176,6 @@ object ExtractJob {
     val totalRows = io.readOrEmpty(spark, ckptPath, ParquetTableIO.checkpointSchema)
       .agg(coalesce(sum(col("n_docs")), lit(0L))).as[Long].collect()(0)
     (totalRows, doneIds.size.toLong)
-  }
-
-  /** Persisted logical-part count: first run writes `$outDir/parts.meta`
-    * (temp + atomic rename); later runs adopt it, warning when the CLI
-    * requested something else.
-    */
-  private def resolveParts(spark: SparkSession, outDir: String, requested: Int): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/parts.meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val stored =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-        finally in.close()
-      if (stored != requested)
-        System.err.println(s"[extract] adopting persisted numLogicalParts=$stored " +
-          s"(CLI requested $requested — changing P would corrupt resume)")
-      stored
-    } else {
-      fs.mkdirs(p.getParent)
-      val tmp = new org.apache.hadoop.fs.Path(s"$outDir/.parts.meta.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"$requested\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.rename(tmp, p)
-      requested
-    }
   }
 
   def main(args: Array[String]): Unit = {

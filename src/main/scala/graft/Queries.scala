@@ -28,12 +28,10 @@ object Queries {
   def pages(s: SparkSession, sfDir: String, withDups: Boolean = false): Dataset[Page] =
     PageSource.fromDocuments(s, sfDir, withDups)
 
-  def extracted(s: SparkSession, sfDir: String): Dataset[ExtractedPage] = {
-    import s.implicits._
-    ExtractPipeline.extract(
-      pages(s, sfDir).select(col("url"), col("warc_ts"), col("html")).as[PageLite],
+  def extracted(s: SparkSession, sfDir: String): DataFrame =
+    ExtractPipeline.extractExpr(
+      pages(s, sfDir).select(col("url"), col("warc_ts"), col("html")),
       ExtractorConfig.spaceJoined)
-  }
 
   def scoredBlocks(s: SparkSession, sfDir: String): Dataset[ScoredBlockRow] = {
     import s.implicits._
@@ -1239,7 +1237,7 @@ object Queries {
       .orderBy(col("url"))
 
   def scoreBlocks(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF()
+    extracted(s, d)
       .select(col("url"), col("n_blocks").cast("long").as("n_blocks"),
         col("n_kept").cast("long").as("n_kept"))
       .orderBy(col("url"))
@@ -1249,7 +1247,7 @@ object Queries {
     */
   def groupRegions(s: SparkSession, d: String): DataFrame = {
     val kept = scoredBlocks(s, d).toDF()
-      .filter(col("score") >= ExtractorConfig.spaceJoined.textThreshold)
+      .filter(col("score") >= Assembler.TextThreshold)
     val w = Window.partitionBy(col("url")).orderBy(col("blockId"))
     kept
       .withColumn("prevId", lag(col("blockId"), 1).over(w))
@@ -1257,7 +1255,7 @@ object Queries {
       .withColumn("newRegion",
         when(col("prevId").isNull, 1)
           .when(col("prevId") + 1 =!= col("blockId"), 1)
-          .when(col("prevLink") < ExtractorConfig.spaceJoined.linkThreshold, 1)
+          .when(col("prevLink") < Assembler.LinkThreshold, 1)
           .otherwise(0))
       .groupBy(col("url"))
       .agg(sum(col("newRegion")).cast("long").as("n_regions"))
@@ -1269,14 +1267,14 @@ object Queries {
     * DuckDB oracle recomputes every offset from the paragraph grammar.
     */
   def spansView(s: SparkSession, d: String): DataFrame =
-    ExtractPipeline.spansAsStructs(extracted(s, d).toDF())
+    ExtractPipeline.spansAsStructs(extracted(s, d))
       .select(col("url"), posexplode(col("spans")).as(Seq("i", "span")))
       .select(col("url"), col("i"),
         col("span.start").as("start"), col("span.end").as("end"))
       .orderBy(col("url"), col("i"))
 
   def assembleSpans(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF()
+    extracted(s, d)
       .select(col("url"), size(col("span_starts")).cast("long").as("n_spans"),
         length(col("text")).cast("long").as("text_len"))
       .orderBy(col("url"))
@@ -1286,7 +1284,7 @@ object Queries {
     * direct value compare here).
     */
   def extractPipeline(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF().select(col("url"), col("text")).orderBy(col("url"))
+    extracted(s, d).select(col("url"), col("text")).orderBy(col("url"))
 
   /** PDF extraction leg (north rule: "PDF/layout parse"): documents
     * wrapped as one-page PDFs (Flate + raw streams) and run through THE
@@ -1345,17 +1343,17 @@ object Queries {
   }
 
   def digestOutput(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF()
+    extracted(s, d)
       .select(col("url"), sha2(col("text"), 256).as("text_sha"))
       .orderBy(col("url"))
 
-  def dedupLatest(s: SparkSession, d: String): DataFrame =
-    ExtractPipeline.dedupLatest(pages(s, d, withDups = true).toDF())
+  def latestSnapshots(s: SparkSession, d: String): DataFrame =
+    ExtractPipeline.dedupAndCluster(pages(s, d, withDups = true).toDF(), 8)
       .select(col("url"), col("warc_ts").cast("long").as("warc_epoch"))
       .orderBy(col("url"))
 
   def metricsByHost(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF()
+    extracted(s, d)
       .withColumn("host", regexp_extract(col("url"), "^https://([^/]+)/", 1))
       .groupBy(col("host"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1368,7 +1366,7 @@ object Queries {
     * scan of the raw html.
     */
   def hostCost(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF()
+    extracted(s, d)
       .withColumn("host", regexp_extract(col("url"), "^https://([^/]+)/", 1))
       .groupBy(col("host"))
       .agg(
@@ -1451,7 +1449,7 @@ object Queries {
 
   def repartitionRange(s: SparkSession, d: String): DataFrame =
     ExtractPipeline.clusterForWrite(
-        ExtractPipeline.withPartId(extracted(s, d).toDF(), 256), 8)
+        ExtractPipeline.withPartId(extracted(s, d), 256), 8)
       .select(col("url")).orderBy(col("url"))
 
   /** Projection-prune query (P1): minimal column set + agg. */

@@ -142,7 +142,7 @@ object SparkEntry {
     "extract_pdf" -> (Queries.extractPdf _),
     "extract_warc" -> (Queries.extractWarc _),
     "digest_output" -> (Queries.digestOutput _),
-    "dedup_latest" -> (Queries.dedupLatest _),
+    "dedup_latest" -> (Queries.latestSnapshots _),
     "metrics_by_host" -> (Queries.metricsByHost _),
     "skew_topk" -> (Queries.skewTopk _),
     "host_cost" -> (Queries.hostCost _),

@@ -3,7 +3,7 @@ package graft.extract
 /** Stage M3+M4 — region grouping + deterministic span assembly
   * (SURVEY.md §2.3), the CRNN/CTC-decode analog (BASELINE.json
   * north_star): threshold the score array, coalesce adjacent winning
-  * blocks whose affinity clears linkThreshold into regions (the
+  * blocks whose affinity clears LinkThreshold into regions (the
   * connected-components-merge analog), then assemble the output text —
   * collapse whitespace runs (≡ CTC collapse-repeats; done in the
   * tokenizer), drop boilerplate blocks (≡ drop blanks), join in reading
@@ -35,15 +35,22 @@ object Assembler {
     n
   }
 
-  /** Keep predicate (P2 score threshold + P3 size gate). */
-  @inline def kept(sp: ScoredPage, i: Int, cfg: ExtractorConfig): Boolean =
-    sp.scores(i) >= cfg.textThreshold && sp.blocks(i).nChars >= cfg.minChars
+  /** Keep blocks scoring at least this (CRAFT text_threshold analog). */
+  val TextThreshold: Float = 1.0f
+
+  /** Merge adjacent kept blocks into one region when their affinity is
+    * at least this (CRAFT link/affinity threshold analog).
+    */
+  val LinkThreshold: Float = 0.5f
+
+  /** Keep predicate (P2 score threshold). */
+  @inline def kept(sp: ScoredPage, i: Int): Boolean = sp.scores(i) >= TextThreshold
 
   /** Number of regions among kept blocks (exposed for tests and the
     * relational group_regions cross-check).
     */
-  def regionIds(sp: ScoredPage, cfg: ExtractorConfig): Array[Int] = {
-    val keep = sp.scores.indices.filter(i => kept(sp, i, cfg)).toArray
+  def regionIds(sp: ScoredPage): Array[Int] = {
+    val keep = sp.scores.indices.filter(i => kept(sp, i)).toArray
     val ids = new Array[Int](keep.length)
     var region = 0
     var k = 0
@@ -51,7 +58,7 @@ object Assembler {
       if (k > 0) {
         val prev = keep(k - 1)
         val cur = keep(k)
-        val adjacentLinked = cur == prev + 1 && sp.linkScores(prev) >= cfg.linkThreshold
+        val adjacentLinked = cur == prev + 1 && sp.linkScores(prev) >= LinkThreshold
         if (!adjacentLinked) region += 1
       }
       ids(k) = region
@@ -77,7 +84,7 @@ object Assembler {
     val n = sp.blocks.length
     var nKept = 0
     var i = 0
-    while (i < n) { if (kept(sp, i, cfg)) nKept += 1; i += 1 }
+    while (i < n) { if (kept(sp, i)) nKept += 1; i += 1 }
     val starts = new Array[Int](nKept)
     val ends = new Array[Int](nKept)
     val blockIds = new Array[Int](nKept)
@@ -103,19 +110,10 @@ object Assembler {
     var k = 0
     i = 0
     while (i < n) {
-      if (kept(sp, i, cfg)) {
+      if (kept(sp, i)) {
         if (k > 0) appendPiece(cfg.blockSep)
-        val t = sp.blocks(i).text
         starts(k) = byteLen
-        // rendering knobs (default "" = byte-identity): list items /
-        // quotes carry their prefix inside the span
-        val pre = sp.blocks(i).tag match {
-          case "li" if cfg.listItemPrefix.nonEmpty => cfg.listItemPrefix
-          case "blockquote" if cfg.quotePrefix.nonEmpty => cfg.quotePrefix
-          case _ => ""
-        }
-        if (pre.nonEmpty) appendPiece(pre)
-        appendPiece(t)
+        appendPiece(sp.blocks(i).text)
         ends(k) = byteLen
         blockIds(k) = sp.blocks(i).blockId
         scores(k) = sp.scores(i)

@@ -15,12 +15,12 @@ final case class Page(
     lang: String
 )
 
-/** Pruned projection of [[Page]] for the extraction hot path: the
-  * pipeline never reads the crawl's noisy `text` column (SURVEY.md §4.2
-  * column-pruning contract) — selecting into this type lets Catalyst
-  * push the 3-column projection into the scan. `warc_ts` rides along so
-  * latest-snapshot dedup can run AFTER extraction (shuffling extracted
-  * text, ~25% of the raw html bytes, instead of the html itself).
+/** The columns extraction reads — [[Page]] without the crawl's noisy
+  * `text` (SURVEY.md §4.2 column-pruning contract) and `lang`. Input of
+  * [[GoldenExtractor.extractPage]]; the Spark pipeline selects the same
+  * three columns so the scan never reads the decoy `text`. `warc_ts`
+  * rides along so latest-snapshot dedup can run AFTER extraction
+  * (shuffling extracted text, ~25% of the raw html bytes, not the html).
   */
 final case class PageLite(url: String, warc_ts: Timestamp, html: Array[Byte])
 
@@ -38,9 +38,6 @@ final case class Block(
     nLinkChars: Int,
     nTags: Int
 )
-
-/** Tokenized page: the output of stage M1 (SURVEY.md §2.3). */
-final case class TokenizedPage(url: String, blocks: Array[Block])
 
 /** Scored page: stage M2 output. `scores`/`linkScores` are primitive
   * Float arrays indexed by blockId (the region/affinity score-map
@@ -61,12 +58,11 @@ final case class ScoredPage(
 final case class Span(start: Int, end: Int, blockId: Int, kind: String, score: Float)
 
 /** Final extracted row (SURVEY.md §1.2 output table) plus metrics
-  * fields used by the checkpoint/lineage table.
-  */
-/** Spans are stored STRUCT-OF-ARRAYS: four parallel primitive arrays
+  * fields used by the checkpoint/lineage table. Spans are stored
+  * STRUCT-OF-ARRAYS: four parallel primitive arrays
   * (index = span ordinal) instead of ARRAY<STRUCT<...>>. Primitive
   * arrays hit Spark's UnsafeArrayData fast path — no per-element object
-  * construction in the encoder, no nested-group assembly in parquet —
+  * construction, no nested-group assembly in parquet —
   * measured ~30% of pipeline wall-time at 8 cores with the row-form
   * representation. Row-form spans remain available relationally via
   * arrays_zip (see Queries / ExtractPipeline.spansAsStructs). Span kind
@@ -87,46 +83,18 @@ final case class ExtractedPage(
     bytes_out: Long
 )
 
-/** Per-logical-partition checkpoint/metrics row (SURVEY.md §2.9).
-  * part_id is a STABLE unit: pmod(xxhash64(url), P) — independent of
-  * runtime parallelism so resume works across cluster sizes.
-  */
-final case class PartitionMetrics(
-    part_id: Int,
-    n_docs: Long,
-    n_blocks: Long,
-    n_kept: Long,
-    bytes_in: Long,
-    bytes_out: Long,
-    attempt: Int,
-    job_id: String
-)
-
-/** Extraction heuristic configuration — the analog of the reference's
-  * model weights + thresholds (CRAFT text_threshold / link_threshold).
-  * Broadcast once per job; pure data, no state.
+/** Extraction configuration: the two settings production varies.
+  * Broadcast once per job; pure data, no state. The score and affinity
+  * thresholds are fixed constants of the heuristic ([[Assembler.TextThreshold]],
+  * [[Assembler.LinkThreshold]]), not per-job settings.
   *
-  * @param textThreshold  keep blocks with score >= this (CRAFT text_threshold analog)
-  * @param linkThreshold  merge adjacent kept blocks into one region when
-  *                       affinity >= this (CRAFT link/affinity threshold analog)
-  * @param blockSep       separator between kept blocks in the output text
-  * @param maxHtmlBytes   per-page work cap (canvas_size/mag_ratio analog)
-  * @param minChars       size/validity gate (P3): kept blocks must also
-  *                       have at least this many chars (0 = off, the
-  *                       default — score already rejects empty blocks)
-  * @param listItemPrefix rendering knob: prepended to kept `li` blocks
-  *                       (e.g. "- " for markdown-ish output). Default ""
-  *                       keeps byte-identity with the plain rendering.
-  * @param quotePrefix    same for `blockquote` blocks (e.g. "> ")
+  * @param blockSep     separator between kept blocks in the output text
+  * @param maxHtmlBytes per-page work cap on outside input
+  *                     (canvas_size/mag_ratio analog)
   */
 final case class ExtractorConfig(
-    textThreshold: Float = 1.0f,
-    linkThreshold: Float = 0.5f,
     blockSep: String = "\n",
-    maxHtmlBytes: Int = 4 * 1024 * 1024,
-    minChars: Int = 0,
-    listItemPrefix: String = "",
-    quotePrefix: String = ""
+    maxHtmlBytes: Int = 4 * 1024 * 1024
 )
 
 object ExtractorConfig {

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
@@ -11,63 +11,47 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.extract.{Assembler, ContentTokenizer, ExtractorConfig, Scorer}
 
 /** Native whole-operator expression (SURVEY.md §4.3b, the M7 path):
-  * `extract_page(html, textThreshold, linkThreshold, blockSep,
-  * maxHtmlBytes, minChars)` → STRUCT<text, span_starts, span_ends,
-  * span_block_ids, span_scores, n_blocks, n_kept, bytes_in, bytes_out>.
+  * `extract_page(html, blockSep, maxHtmlBytes)` → STRUCT<text,
+  * span_starts, span_ends, span_block_ids, span_scores, n_blocks, n_kept,
+  * bytes_in, bytes_out>. This is the only Spark entry to the kernel.
   *
-  * Versus the typed-map formulation (ExtractPipeline.extract), this
-  * removes the DeserializeToObject/SerializeFromObject pair — the whole
-  * pipeline stays a Project inside the codegen stage; the kernel writes
-  * straight into an InternalRow (UTF8String + primitive UnsafeArrayData,
-  * no case-class intermediates, no encoder). CodegenFallback only wraps
-  * the kernel CALL — the row never leaves Tungsten representation.
+  * The whole pipeline stays a Project inside the codegen stage: the
+  * kernel writes straight into an InternalRow (UTF8String + primitive
+  * UnsafeArrayData, no case-class intermediates, no encoder, no
+  * DeserializeToObject/SerializeFromObject pair). CodegenFallback only
+  * wraps the kernel CALL — the row never leaves Tungsten representation.
   *
   * Byte-identity: same kernel (HtmlTokenizer/Scorer/Assembler), so the
-  * result is bit-for-bit equal to GoldenExtractor (asserted in
-  * FunctionsSpec + the pipeline equivalence test).
+  * result is bit-for-bit equal to GoldenExtractor (asserted row by row
+  * in SparkPipelineSpec).
   */
 case class ExtractPage(children: Seq[Expression])
     extends Expression with CodegenFallback {
 
   override def nullable: Boolean = false
-  override def foldable: Boolean = false
 
+  // analysis-time type errors beat executor-side ClassCastException
   override def checkInputDataTypes(): TypeCheckResult = {
-    if (children.length < 6 || children.length > 8)
-      return TypeCheckResult.TypeCheckFailure(
-        "extract_page expects 6 args (+ optional listItemPrefix, quotePrefix)")
-    if (children.head.dataType != BinaryType)
-      return TypeCheckResult.TypeCheckFailure("arg 1 (html) must be BINARY")
-    if (!children.tail.forall(_.foldable))
-      return TypeCheckResult.TypeCheckFailure("config args must be literals")
-    // analysis-time type errors beat executor-side ClassCastException
-    def bad(i: Int, want: String) = TypeCheckResult.TypeCheckFailure(
-      s"arg ${i + 1} must be $want, got ${children(i).dataType.simpleString}")
-    val numeric = Seq(1, 2, 4, 5)
-    val strings = Seq(3) ++ (6 until children.length)
-    numeric.collectFirst {
-      case i if !children(i).dataType.isInstanceOf[NumericType] => bad(i, "numeric")
-    }.orElse(strings.collectFirst {
-      case i if children(i).dataType != StringType => bad(i, "STRING")
-    }).getOrElse(TypeCheckResult.TypeCheckSuccess)
+    def fail(msg: String) = TypeCheckResult.TypeCheckFailure(msg)
+    if (children.length != 3)
+      fail(s"extract_page expects 3 args (html, blockSep, maxHtmlBytes), got ${children.length}")
+    else if (children(0).dataType != BinaryType)
+      fail(s"arg 1 (html) must be BINARY, got ${children(0).dataType.simpleString}")
+    else if (!children(1).foldable || children(1).dataType != StringType)
+      fail(s"arg 2 (blockSep) must be a STRING literal, got ${children(1).dataType.simpleString}")
+    else if (!children(2).foldable || !children(2).dataType.isInstanceOf[NumericType])
+      fail(s"arg 3 (maxHtmlBytes) must be a numeric literal, got ${children(2).dataType.simpleString}")
+    else TypeCheckResult.TypeCheckSuccess
   }
 
   override val dataType: DataType = ExtractPage.schema
 
-  @transient private lazy val cfg: ExtractorConfig = {
-    def lit(e: Expression): Any = e.eval(InternalRow.empty)
-    ExtractorConfig(
-      textThreshold = lit(children(1)).asInstanceOf[Number].floatValue(),
-      linkThreshold = lit(children(2)).asInstanceOf[Number].floatValue(),
-      blockSep = lit(children(3)).asInstanceOf[UTF8String].toString,
-      maxHtmlBytes = lit(children(4)).asInstanceOf[Number].intValue(),
-      minChars = lit(children(5)).asInstanceOf[Number].intValue(),
-      listItemPrefix =
-        if (children.length > 6) lit(children(6)).asInstanceOf[UTF8String].toString else "",
-      quotePrefix =
-        if (children.length > 7) lit(children(7)).asInstanceOf[UTF8String].toString else ""
-    )
-  }
+  @transient private lazy val cfg: ExtractorConfig = ExtractorConfig(
+    blockSep = children(1).eval(InternalRow.empty).asInstanceOf[UTF8String].toString,
+    maxHtmlBytes = children(2).eval(InternalRow.empty) match {
+      case d: Decimal => d.toInt
+      case n => n.asInstanceOf[Number].intValue()
+    })
 
   override def eval(input: InternalRow): Any = {
     val html = children.head.eval(input).asInstanceOf[Array[Byte]]
@@ -91,16 +75,6 @@ object ExtractPage {
     StructField("bytes_in", LongType, nullable = false),
     StructField("bytes_out", LongType, nullable = false)
   ))
-
-  def apply(html: Expression, cfg: ExtractorConfig): ExtractPage =
-    ExtractPage(Seq(html,
-      Literal(cfg.textThreshold), Literal(cfg.linkThreshold),
-      Literal(UTF8String.fromString(cfg.blockSep), StringType),
-      Literal(cfg.maxHtmlBytes), Literal(cfg.minChars),
-      // EVERY cfg field rides along — dropping the rendering prefixes
-      // here would silently diverge from the typed path for the same cfg
-      Literal(UTF8String.fromString(cfg.listItemPrefix), StringType),
-      Literal(UTF8String.fromString(cfg.quotePrefix), StringType)))
 
   /** Kernel → InternalRow, no case-class intermediates. */
   def extractToRow(html: Array[Byte], cfg: ExtractorConfig): InternalRow = {

@@ -1,81 +1,42 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.extract._
 
-/** The Spark-native extraction pipeline (SURVEY.md §3.2): typed Dataset
+/** The Spark-native extraction pipeline (SURVEY.md §3.2): DataFrame
   * transformations under Catalyst, NO RDDs (BASELINE.json input_hint).
   *
   * The three reference stages (preprocess → detect → recognize) are
-  * FUSED into one `mapPartitions` (SURVEY.md §4.3a): a single
-  * object-mode region means exactly one UnsafeRow⇄object ser/de
-  * round-trip per row — at 10^12 rows the ser/de tax dominates after
-  * tokenization itself, so one boundary, not three. This also mirrors
-  * the reference's shape: one linear per-document pipeline with
-  * per-partition reuse of the tokenizer/scorer (the batched-crops
-  * analog of BASELINE.json north_star).
+  * FUSED into one native expression, `extract_page` (SURVEY.md §4.3b):
+  * no object-mode region at all, so no UnsafeRow⇄object ser/de per row —
+  * at 10^12 rows that tax would dominate after tokenization itself.
+  * This mirrors the reference's shape: one linear per-document pipeline
+  * with the kernel config bound once per task (the batched-crops analog
+  * of BASELINE.json north_star).
   */
 object ExtractPipeline {
 
   /** Input gate (P4): skip unreadable/empty pages. Expressed as a
-    * Column predicate BEFORE the object map so Catalyst can push it
-    * into the scan.
+    * Column predicate so Catalyst can push it into the scan.
     */
   def inputGate(pages: DataFrame): DataFrame =
     pages.filter(col("html").isNotNull && length(col("html")) > 0)
 
-  /** Fused M1→M2→M3→M4: one mapPartitions, one ser/de boundary.
-    * Takes the PRUNED projection (url, html) so the parquet/Iceberg scan
-    * never reads the decoy crawl `text` column.
-    */
-  def extract(pages: Dataset[PageLite], cfg: ExtractorConfig): Dataset[ExtractedPage] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[ExtractedPage]
-    pages.mapPartitions { it =>
-      // per-partition setup amortized here (cfg is tiny; captured in the
-      // closure = broadcast-by-task-binary, the model-load analog)
-      it.map(p => GoldenExtractor.extractPage(p, cfg))
-    }
-  }
-
-  /** Expression-mode extraction (M7 / SURVEY.md §4.3b): same kernel as
-    * [[extract]] but as a native Catalyst expression — NO object-mode
-    * boundary (no Deserialize/SerializeFromObject), the pipeline stays
-    * a single codegen Project over the scan. Byte-identical to the
-    * typed-map path (equivalence test in SparkPipelineSpec).
+  /** Fused M1→M4 as the native `extract_page` expression: the pipeline
+    * stays a single codegen Project over the scan. Takes the PRUNED
+    * projection (url, warc_ts, html) so the parquet/Iceberg scan never
+    * reads the decoy crawl `text` column. Byte-identical to
+    * [[GoldenExtractor.extractPage]] (row-by-row test in SparkPipelineSpec).
     */
   def extractExpr(pages: DataFrame, cfg: ExtractorConfig): DataFrame = {
     val spark = pages.sparkSession
     graft.functions.GraftExtensions.register(spark)
     pages
       .withColumn("__ex", call_function("extract_page",
-        col("html"), lit(cfg.textThreshold), lit(cfg.linkThreshold),
-        lit(cfg.blockSep), lit(cfg.maxHtmlBytes), lit(cfg.minChars),
-        lit(cfg.listItemPrefix), lit(cfg.quotePrefix)))
-      .select(
-        col("url"), col("warc_ts"),
-        col("__ex.text").as("text"),
-        col("__ex.span_starts").as("span_starts"),
-        col("__ex.span_ends").as("span_ends"),
-        col("__ex.span_block_ids").as("span_block_ids"),
-        col("__ex.span_scores").as("span_scores"),
-        col("__ex.n_blocks").as("n_blocks"),
-        col("__ex.n_kept").as("n_kept"),
-        col("__ex.bytes_in").as("bytes_in"),
-        col("__ex.bytes_out").as("bytes_out"))
-  }
-
-  /** Latest-snapshot dedup (A2/W3): keep the newest warc_ts per url.
-    * Deterministic tie-break on warc_ts only — snapshots of one url
-    * with equal ts are byte-identical by the determinism contract.
-    */
-  def dedupLatest(pages: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("url")).orderBy(col("warc_ts").desc)
-    pages.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+        col("html"), lit(cfg.blockSep), lit(cfg.maxHtmlBytes)))
+      .select(col("url"), col("warc_ts"), col("__ex.*")) // ExtractPage.schema's 9 fields
   }
 
   /** Stable logical partition id (R3): pmod(xxhash64(url), P) —
@@ -95,19 +56,13 @@ object ExtractPipeline {
   def clusterForWrite(df: DataFrame, numPartitions: Int): DataFrame =
     df.repartitionByRange(numPartitions, col("url_hash"))
 
-  /** Explicit salting helper (J3/R2) for stage-level skew: a salt
-    * column derived from url bytes, NOT from the skewed host key.
-    */
-  def withSalt(df: DataFrame, buckets: Int): DataFrame =
-    df.withColumn("salt", pmod(xxhash64(col("url"), lit(0x5a17L)), lit(buckets.toLong)).cast("int"))
-
   /** Latest-snapshot dedup + output clustering in ONE exchange — the
     * production write path.
     *
     * Why not window-dedup then [[clusterForWrite]]: that is two
     * exchanges, and repartitionByRange's range-bounds SAMPLING job
     * re-executes the upstream stage (at 10^12 rows, a second pass over
-    * the shuffle / a second run of the object-mode extraction). Since
+    * the shuffle / a second run of the extraction). Since
     * url_hash = xxhash64(url) is uniform by construction, hash
     * clustering on it yields the same balanced output files with NO
     * sampling pass — and a hot host still cannot pin a partition

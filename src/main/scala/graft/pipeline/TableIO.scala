@@ -49,6 +49,39 @@ trait TableIO {
     * the deleted file names.
     */
   def reconcileOrphanFiles(spark: SparkSession, ident: String): Seq[String] = Seq.empty
+
+  /** Logical-part count P of the output table `ident`. part_id =
+    * pmod(xxhash64(url), P) is a pure function of url only for FIXED P,
+    * so the first run persists `requested` and every later run ADOPTS
+    * the stored value (the caller's P is a request, not an override).
+    * Default: `parts.meta` next to the table directory (temp + atomic
+    * rename), for any Hadoop-FS path.
+    */
+  def resolveParts(spark: SparkSession, ident: String, requested: Int): Int = {
+    val dir = new org.apache.hadoop.fs.Path(ident).getParent
+    val p = new org.apache.hadoop.fs.Path(dir, "parts.meta")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) {
+      val in = fs.open(p)
+      adoptParts(
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt finally in.close(),
+        requested)
+    } else {
+      val tmp = new org.apache.hadoop.fs.Path(dir, ".parts.meta.tmp")
+      val out = fs.create(tmp, true) // creates missing parent dirs
+      try out.write(s"$requested\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      fs.rename(tmp, p)
+      requested
+    }
+  }
+
+  protected def adoptParts(stored: Int, requested: Int): Int = {
+    if (stored != requested)
+      System.err.println(s"[extract] adopting persisted numLogicalParts=$stored " +
+        s"(requested $requested — changing P would corrupt resume)")
+    stored
+  }
 }
 
 object ParquetTableIO extends TableIO {
@@ -361,6 +394,20 @@ object IcebergTableIO extends TableIO {
 
   override def snapshotId(spark: SparkSession, ident: String): String =
     currentSnapshot(spark, ident).getOrElse("empty")
+
+  private val PartsProperty = "graft.logical-parts"
+
+  /** P is a table property of the output table: set by the first run
+    * (the table must exist, see [[createPagesExtracted]]), adopted after.
+    */
+  override def resolveParts(spark: SparkSession, ident: String, requested: Int): Int =
+    spark.sql(s"SHOW TBLPROPERTIES $ident").collect()
+      .collectFirst { case r if r.getString(0) == PartsProperty => r.getString(1).toInt } match {
+      case Some(stored) => adoptParts(stored, requested)
+      case None =>
+        spark.sql(s"ALTER TABLE $ident SET TBLPROPERTIES ('$PartsProperty' = '$requested')")
+        requested
+    }
 
   /** DDL for the output table: url-bucketed hidden partitioning — the
     * Iceberg-native form of ExtractPipeline.dedupAndCluster's

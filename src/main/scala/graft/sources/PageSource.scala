@@ -260,8 +260,8 @@ object PageSource {
   /** Bench corpus: n seed-fixed pages. Generated distributed (range →
     * map), partitioning-independent by construction.
     */
-  def genPages(spark: SparkSession, n: Long, parts: Int, wordScale: Int = 1): Dataset[Page] = {
+  def genPages(spark: SparkSession, n: Long, parts: Int): Dataset[Page] = {
     import spark.implicits._
-    spark.range(0L, n, 1L, parts).as[Long].map(id => genPageScaled(id, wordScale))
+    spark.range(0L, n, 1L, parts).as[Long].map(id => genPage(id))
   }
 }

@@ -67,30 +67,6 @@ class ExtractCoreSpec extends AnyFunSuite {
     assert(!blocks.exists(_.text.contains("no")))
   }
 
-  test("list/blockquote rendering knobs: default off (byte-identity), prefixes when set") {
-    val html =
-      """<body><p>intro words here</p>
-        |<ul><li>first item text ok</li><li>second item text ok</li></ul>
-        |<blockquote>quoted passage of text</blockquote></body>""".stripMargin
-    // default config: rendering unchanged — prefixes absent
-    val (plain, plainSpans) = GoldenExtractor.extract(bytes(html), cfg)
-    assert(!plain.contains("- ") && !plain.contains("> "))
-    // knobs on: li gets the bullet, blockquote the quote marker, spans
-    // cover the prefixed block and offsets stay exact byte offsets
-    val md = cfg.copy(listItemPrefix = "- ", quotePrefix = "> ")
-    val (text, spans) = GoldenExtractor.extract(bytes(html), md)
-    assert(text.contains("- first item text ok"))
-    assert(text.contains("- second item text ok"))
-    assert(text.contains("> quoted passage of text"))
-    assert(text.startsWith("intro words here"))
-    val tb = text.getBytes(StandardCharsets.UTF_8)
-    spans.foreach { s =>
-      val slice = new String(tb, s.start, s.end - s.start, StandardCharsets.UTF_8)
-      assert(slice.nonEmpty && text.contains(slice))
-    }
-    assert(spans.length == plainSpans.length)
-  }
-
   test("whitespace collapse and entities are deterministic") {
     val html = "<p>  a&nbsp;&amp; b\t\n  c &lt;tag&gt; &#65; &unknown; </p>"
     val blocks = HtmlTokenizer.tokenize(bytes(html), cfg)
@@ -149,17 +125,6 @@ class ExtractCoreSpec extends AnyFunSuite {
     assert(open(0).text == "x tail")
   }
 
-  test("minChars gate (P3) drops short blocks independent of score") {
-    val html = "<div><p>ok</p><p>this block is long enough to keep</p></div>"
-    val gated = ExtractorConfig(blockSep = " ", minChars = 10)
-    val (text, spans) = GoldenExtractor.extract(bytes(html), gated)
-    assert(text == "this block is long enough to keep")
-    assert(spans.length == 1)
-    // default minChars = 0 keeps both
-    val (text0, _) = GoldenExtractor.extract(bytes(html), cfgSp)
-    assert(text0 == "ok this block is long enough to keep")
-  }
-
   test("invalid UTF-8 bytes decode deterministically") {
     val bad = Array[Byte]('<', 'p', '>', 'a', 0x80.toByte, 0xff.toByte, 'b', '<', '/', 'p', '>')
     val b1 = HtmlTokenizer.tokenize(bad, cfg)
@@ -175,9 +140,9 @@ class ExtractCoreSpec extends AnyFunSuite {
     val blocks = HtmlTokenizer.tokenize(bytes(html), cfg)
     val sp = Scorer.score("u", blocks)
     val byTag = blocks.map(_.tag).zip(sp.scores).toMap
-    assert(byTag("p") >= cfg.textThreshold)
-    assert(byTag("nav") < cfg.textThreshold)
-    assert(byTag("footer") < cfg.textThreshold)
+    assert(byTag("p") >= Assembler.TextThreshold)
+    assert(byTag("nav") < Assembler.TextThreshold)
+    assert(byTag("footer") < Assembler.TextThreshold)
   }
 
   test("scores are primitive float arrays, bitwise stable") {
@@ -310,7 +275,7 @@ class ExtractCoreSpec extends AnyFunSuite {
       PageSource.NavHtml + "<div><p>after nav block text</p></div>"
     val blocks = HtmlTokenizer.tokenize(bytes(html), cfg)
     val sp = Scorer.score("u", blocks)
-    val ids = Assembler.regionIds(sp, cfg)
+    val ids = Assembler.regionIds(sp)
     // nav is dropped; the two leading <p>s merge; the trailing <p> is
     // separated (non-adjacent blockIds)
     assert(ids.toSeq == Seq(0, 0, 1))

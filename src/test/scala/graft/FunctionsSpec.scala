@@ -109,4 +109,31 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("dot_f64")), plan)
     assert(pq.count() > 0)
   }
+
+  test("extract_page rejects bad arguments at analysis, before any task runs") {
+    val s = spark
+    import s.implicits._
+    val df = Seq(("<p>a b c</p>".getBytes("UTF-8"), "<p>x</p>", " ", 7))
+      .toDF("html", "html_str", "sep", "n")
+    // DataFrame construction analyses eagerly: a failure here is thrown
+    // before any Spark job is submitted
+    def rejects(call: String, hint: String): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.selectExpr(call))
+      assert(e.getMessage.contains(hint), s"$call: ${e.getMessage}")
+    }
+    rejects("extract_page(html)", "expects 3 args")
+    rejects("extract_page(html, ' ', 1024, 'extra')", "expects 3 args")
+    rejects("extract_page(html_str, ' ', 1024)", "arg 1 (html) must be BINARY")
+    rejects("extract_page(html, sep, 1024)", "arg 2 (blockSep) must be a STRING literal")
+    rejects("extract_page(html, 1, 1024)", "arg 2 (blockSep) must be a STRING literal")
+    rejects("extract_page(html, ' ', 'big')", "arg 3 (maxHtmlBytes) must be a numeric literal")
+    rejects("extract_page(html, ' ', n)", "arg 3 (maxHtmlBytes) must be a numeric literal")
+    // well-formed calls analyse and run; 1024.0 is a DECIMAL literal
+    val want = graft.extract.GoldenExtractor.extract("<p>a b c</p>".getBytes("UTF-8"),
+      graft.extract.ExtractorConfig(blockSep = " ", maxHtmlBytes = 1024))._1
+    Seq("1024", "1024.0").foreach { n =>
+      val got = df.selectExpr(s"extract_page(html, ' ', $n).text AS t").as[String].collect()
+      assert(got.toSeq == Seq(want), n)
+    }
+  }
 }

@@ -7,9 +7,24 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.extract.{ExtractorConfig, PageLite}
-import graft.pipeline.{ExtractPipeline, ParquetTableIO}
+import graft.extract.{ExtractorConfig, GoldenExtractor, PageLite}
+import graft.pipeline.{Commit, ExtractPipeline, ParquetTableIO, TableIO}
 import graft.sources.PageSource
+
+/** A [[TableIO]] that forwards every call: stands in for wrappers such
+  * as a tracing layer, which must not change ExtractJob's behaviour.
+  */
+final class DelegatingTableIO(io: TableIO) extends TableIO {
+  override def readPages(spark: SparkSession, ident: String) = io.readPages(spark, ident)
+  override def append(df: org.apache.spark.sql.DataFrame, ident: String): Unit = io.append(df, ident)
+  override def readOrEmpty(spark: SparkSession, ident: String,
+      schema: org.apache.spark.sql.types.StructType) = io.readOrEmpty(spark, ident, schema)
+  override def appendCommit(df: org.apache.spark.sql.DataFrame, ident: String) = io.appendCommit(df, ident)
+  override def readCommit(spark: SparkSession, commit: Commit) = io.readCommit(spark, commit)
+  override def snapshotId(spark: SparkSession, ident: String) = io.snapshotId(spark, ident)
+  override def reconcileOrphanFiles(spark: SparkSession, ident: String) =
+    io.reconcileOrphanFiles(spark, ident)
+}
 
 /** Spark-level pipeline tests: byte-identity vs the documents oracle,
   * parallelism invariance (the byte-identity contract operationalized,
@@ -54,10 +69,10 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("parallelism invariance: digest identical at 1 vs 13 partitions") {
     val s = spark
     import s.implicits._
-    val pages = Queries.pages(spark, sfDir).select(col("url"), col("warc_ts"), col("html")).as[PageLite]
+    val pages = Queries.pages(spark, sfDir).select(col("url"), col("warc_ts"), col("html"))
     def digest(np: Int): (Long, Long) = {
       val d = ExtractPipeline.globalDigest(
-        ExtractPipeline.extract(pages.repartition(np), ExtractorConfig.spaceJoined).toDF())
+        ExtractPipeline.extractExpr(pages.repartition(np), ExtractorConfig.spaceJoined))
       val r = d.collect()(0)
       (r.getLong(0), r.getLong(1))
     }
@@ -67,8 +82,8 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dedup_latest keeps exactly the later snapshot per url") {
     val s = spark
     import s.implicits._
-    val deduped = ExtractPipeline.dedupLatest(
-      Queries.pages(spark, sfDir, withDups = true).toDF())
+    val deduped = ExtractPipeline.dedupAndCluster(
+      Queries.pages(spark, sfDir, withDups = true).toDF(), 8)
     val n = deduped.count()
     val nUrls = deduped.select("url").distinct().count()
     assert(n == nUrls)
@@ -247,6 +262,22 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "divergent CLI P must not corrupt the resume")
   }
 
+  test("ExtractJob: a delegating TableIO also adopts the persisted numLogicalParts") {
+    val pagesDir = tmp() + "/pages"
+    PageSource.genPages(spark, 300, 6).toDF().write.parquet(pagesDir)
+    val io = new DelegatingTableIO(ParquetTableIO)
+    val out = tmp()
+    ExtractJob.run(spark, pagesDir, out, numLogicalParts = 8, jobId = "w1", io = io)
+    assert(new java.io.File(s"$out/parts.meta").exists(), "parts.meta must be written")
+    // without adoption, parts 8..15 of P=16 look uncommitted and re-append
+    val (rows, resumed) =
+      ExtractJob.run(spark, pagesDir, out, numLogicalParts = 16, jobId = "w2", io = io)
+    assert(rows == 300 && resumed == 8, s"rows=$rows resumed=$resumed")
+    val table = spark.read.parquet(s"$out/pages_extracted")
+    assert(table.count() == 300 && table.select("url").distinct().count() == 300,
+      "the rerun must append no rows")
+  }
+
   test("production pipeline handles a mixed HTML+PDF corpus (content sniffing)") {
     val s = spark
     import s.implicits._
@@ -283,11 +314,11 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pagesDir = tmp() + "/pages"
     PageSource.genPages(spark, 50, 2).toDF().write.parquet(pagesDir)
     val pages = ParquetTableIO.readPages(spark, pagesDir)
-    val pipeline = ExtractPipeline.extract(
-      ExtractPipeline.dedupLatest(ExtractPipeline.inputGate(pages))
-        .select(col("url"), col("warc_ts"), col("html")).as[PageLite],
+    val extracted = ExtractPipeline.extractExpr(
+      ExtractPipeline.inputGate(pages).select(col("url"), col("warc_ts"), col("html")),
       ExtractorConfig.default)
-    val plan = pipeline.toDF().queryExecution.executedPlan.toString
+    val pipeline = ExtractPipeline.dedupAndCluster(ExtractPipeline.withPartId(extracted, 16), 4)
+    val plan = pipeline.queryExecution.executedPlan.toString
     val read = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(read.contains("url") && read.contains("html"), s"plan: $read")
     assert(!read.contains("text"), s"decoy column read! $read")
@@ -305,47 +336,75 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("rangepartitioning"), "no sampling pass expected")
   }
 
-  test("dedupAndCluster output equals window dedup output (values)") {
+  test("dedupAndCluster equals the newest snapshot per url picked locally (values)") {
     val s = spark
     import s.implicits._
     val pages = Queries.pages(spark, sfDir, withDups = true)
-      .select(col("url"), col("warc_ts"), col("html")).as[PageLite]
-    val extracted = ExtractPipeline.extract(pages, ExtractorConfig.spaceJoined).toDF()
-    val a = ExtractPipeline.dedupAndCluster(
+      .select(col("url"), col("warc_ts"), col("html"))
+    val extracted = ExtractPipeline.extractExpr(pages, ExtractorConfig.spaceJoined)
+    val got = ExtractPipeline.dedupAndCluster(
         ExtractPipeline.withPartId(extracted, 64), 8)
       .select("url", "warc_ts", "text")
       .collect().map(r => (r.getString(0), r.getTimestamp(1), r.getString(2))).sortBy(_._1).toSeq
-    val b = ExtractPipeline.dedupLatest(extracted)
-      .select("url", "warc_ts", "text")
-      .collect().map(r => (r.getString(0), r.getTimestamp(1), r.getString(2))).sortBy(_._1).toSeq
-    assert(a == b)
+    // reference: newest warc_ts per url picked from the collected rows,
+    // text from the single-threaded GoldenExtractor
+    val want = pages.as[PageLite].collect().groupBy(_.url).values
+      .map(_.maxBy(_.warc_ts.getTime))
+      .map(p => (p.url, p.warc_ts, GoldenExtractor.extract(p.html, ExtractorConfig.spaceJoined)._1))
+      .toSeq.sortBy(_._1)
+    assert(want.length < pages.count(), "setup: corpus must contain re-crawled urls")
+    assert(got == want)
   }
 
-  test("expression-mode extraction == typed-map extraction, with no object boundary") {
+  test("extract_page == GoldenExtractor row by row over HTML, PDF and WARC pages") {
     val s = spark
     import s.implicits._
-    val pagesDf = Queries.pages(spark, sfDir).toDF()
-      .select(col("url"), col("warc_ts"), col("html"))
-    val viaExpr = ExtractPipeline.extractExpr(pagesDf, ExtractorConfig.spaceJoined)
-    val viaMap = ExtractPipeline.extract(
-      pagesDf.as[PageLite], ExtractorConfig.spaceJoined).toDF()
-    // identical digests over (url, text) AND identical full rows
-    val de = ExtractPipeline.globalDigest(viaExpr).collect()(0)
-    val dm = ExtractPipeline.globalDigest(viaMap).collect()(0)
-    assert(de.getLong(0) == dm.getLong(0) && de.getLong(1) == dm.getLong(1))
-    val a = viaExpr.select("url", "n_blocks", "n_kept", "bytes_out")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3))).sortBy(_._1).toSeq
-    val b = viaMap.select("url", "n_blocks", "n_kept", "bytes_out")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3))).sortBy(_._1).toSeq
-    assert(a == b)
-    // spans identical too
-    val sa = viaExpr.select("url", "span_starts", "span_ends")
-      .collect().map(r => (r.getString(0), r.getSeq[Int](1), r.getSeq[Int](2))).sortBy(_._1).toSeq
-    val sb = viaMap.select("url", "span_starts", "span_ends")
-      .collect().map(r => (r.getString(0), r.getSeq[Int](1), r.getSeq[Int](2))).sortBy(_._1).toSeq
-    assert(sa == sb)
-    // no object-mode boundary when reading from parquet (the boundary
-    // above belongs to the in-memory test-page builder, not extraction)
+    val cfg = ExtractorConfig.spaceJoined
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+      .collect().sortBy(_._1).take(60)
+    val ts = (id: Long) => new java.sql.Timestamp((PageSource.EpochBase + id) * 1000L)
+    val html = Queries.pages(spark, sfDir)
+      .select(col("url"), col("warc_ts"), col("html")).as[PageLite].collect().toSeq ++
+      PageSource.genPages(spark, 60, 2).collect().map(p => PageLite("gen:" + p.url, p.warc_ts, p.html))
+    val pdf = docs.map { case (id, t) =>
+      PageLite("pdf:" + PageSource.urlOf(id), ts(id), graft.sources.PdfSource.wrapPdf(id, t))
+    }
+    val warc = docs.grouped(5).zipWithIndex.flatMap { case (g, i) =>
+      val file = graft.sources.WarcSource.buildWarcFile(
+        g.map { case (id, t) => (id, PageSource.urlOf(id), PageSource.EpochBase + id,
+          PageSource.wrapHtml(id, t)) }.toSeq,
+        gzipPerRecord = i % 2 == 1)
+      graft.sources.WarcSource.responses(file).map { case (url, epoch, body) =>
+        PageLite("warc:" + url, new java.sql.Timestamp(epoch * 1000L), body)
+      }
+    }.toSeq
+    assert(warc.length == docs.length)
+    val input = html ++ pdf ++ warc
+
+    type Fields = (java.sql.Timestamp, String, Seq[Int], Seq[Int], Seq[Int], Seq[Int],
+      Int, Int, Long, Long)
+    // scores compared by their bits: byte-identity, not float tolerance
+    def bits(a: Iterable[Float]): Seq[Int] = a.map(java.lang.Float.floatToRawIntBits).toSeq
+    val want: Map[String, Fields] = input.map { p =>
+      val e = GoldenExtractor.extractPage(p, cfg)
+      e.url -> (e.warc_ts, e.text, e.span_starts.toSeq, e.span_ends.toSeq,
+        e.span_block_ids.toSeq, bits(e.span_scores), e.n_blocks, e.n_kept, e.bytes_in, e.bytes_out)
+    }.toMap
+    val got: Map[String, Fields] = ExtractPipeline.extractExpr(input.toDF(), cfg)
+      .collect().map { r =>
+        def arr[T](f: String): Seq[T] = r.getSeq[T](r.fieldIndex(f)).toSeq
+        r.getAs[String]("url") -> (r.getAs[java.sql.Timestamp]("warc_ts"), r.getAs[String]("text"),
+          arr[Int]("span_starts"), arr[Int]("span_ends"),
+          arr[Int]("span_block_ids"), bits(arr[Float]("span_scores")),
+          r.getAs[Int]("n_blocks"), r.getAs[Int]("n_kept"),
+          r.getAs[Long]("bytes_in"), r.getAs[Long]("bytes_out"))
+      }.toMap
+    assert(got.size == input.length && want.size == input.length)
+    want.foreach { case (url, w) => assert(got(url) == w, s"row mismatch for $url") }
+
+    // no object-mode boundary when reading from parquet (the in-memory
+    // input above is a LocalRelation, not the production scan)
     val pagesDir = tmp() + "/pages"
     PageSource.genPages(spark, 50, 2).toDF().write.parquet(pagesDir)
     val fromParquet = ExtractPipeline.extractExpr(

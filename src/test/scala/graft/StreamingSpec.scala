@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.extract.{ExtractorConfig, PageLite}
-import graft.pipeline.{ExtractPipeline, ParquetTableIO}
+import graft.extract.{ExtractorConfig, GoldenExtractor, PageLite}
+import graft.pipeline.ParquetTableIO
 import graft.sources.PageSource
 import graft.streaming.StreamingExtract
 
-/** Streaming formulation equals the batch formulation byte-for-byte,
-  * and the streaming checkpoint makes incremental drains exactly-once.
+/** Streaming formulation equals the single-threaded GoldenExtractor
+  * byte-for-byte, and the streaming checkpoint makes incremental drains
+  * exactly-once.
   */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -46,14 +47,21 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val afterFirst = spark.read.parquet(outDir).count()
     assert(afterFirst == 200)
 
-    // batch reference digest over the same input
-    val batch = ExtractPipeline.extract(
-      ExtractPipeline.inputGate(ParquetTableIO.readPages(spark, pagesDir))
-        .select(col("url"), col("warc_ts"), col("html")).as[PageLite],
-      ExtractorConfig.default)
-    val bd = ExtractPipeline.globalDigest(batch.toDF()).collect()(0)
-    val sd = ExtractPipeline.globalDigest(spark.read.parquet(outDir)).collect()(0)
-    assert(sd.getLong(0) == bd.getLong(0) && sd.getLong(1) == bd.getLong(1))
+    // batch reference: GoldenExtractor over the same input, collected
+    val want = ParquetTableIO.readPages(spark, pagesDir)
+      .select(col("url"), col("warc_ts"), col("html")).as[PageLite].collect()
+      .map { p =>
+        val e = GoldenExtractor.extractPage(p, ExtractorConfig.default)
+        e.url -> (e.text, e.span_starts.toSeq, e.span_ends.toSeq, e.n_blocks, e.n_kept,
+          e.bytes_in, e.bytes_out)
+      }.toMap
+    val got = spark.read.parquet(outDir).collect().map { r =>
+      def ints(f: String): Seq[Int] = r.getSeq[Int](r.fieldIndex(f)).toSeq
+      r.getAs[String]("url") -> (r.getAs[String]("text"), ints("span_starts"), ints("span_ends"),
+        r.getAs[Int]("n_blocks"), r.getAs[Int]("n_kept"),
+        r.getAs[Long]("bytes_in"), r.getAs[Long]("bytes_out"))
+    }.toMap
+    assert(got.size == 200 && got == want)
 
     // drain 2 with no new files: checkpoint must prevent re-processing
     StreamingExtract.start(spark, pagesDir, outDir, ckpt).awaitTermination()
